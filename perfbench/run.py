@@ -30,17 +30,21 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-BUILD = os.path.join(ROOT, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
+BUILD = os.path.join(ROOT, ".bench_build")
 
-# One face per family: relational, dedup, ANN, streaming, c-TF-IDF. The
-# relational and streaming faces bypass the registries; the others build
-# them cold and read them warm. The retrieval faces (search_bm25,
-# search_bm25_real) are left out: on some seeds their tied BM25 ranks differ
-# from the DuckDB oracle, so a run could not be both complete and correct.
+# One face per family: relational, dedup, ANN, streaming, c-TF-IDF and
+# retrieval (RAG top-k). The relational and streaming faces bypass the
+# registries; the others build them cold and read them warm. search_bm25 and
+# search_bm25_real go back in once their tied BM25 ranks are ordered: on some
+# seeds those differ from the DuckDB oracle, so a run could not be both
+# complete and correct.
 MIX = [
     "rel_pricing_summary", "dedup_minhash_lsh", "sim_ivf_ann", "stream_hourly",
-    "topic_ctfidf",
+    "topic_ctfidf", "rag_chunk_topk",
 ]
+# Warm passes in the face_mix unit of work; passes beyond these (run only
+# until --seconds have passed) add latency samples, not unit time.
+WARM_PASSES = 4
 TOPICS = 10
 TOP_N = 10  # keywords per topic in the report's topics sheet
 # Input sizes: documents, embeddings, and the scale factor of the star
@@ -284,10 +288,11 @@ def end_to_end(workload, raw, failed_faces):
         u = raw["units"][0]
         m.update(wall_s=u["wall_s"], cold_s=u["wall_s"], cpu_s=u["cpu_s"])
         return m, None
-    # The session (cold pass plus warm passes) is the unit: a 3-4 s warm
-    # pass alone swung by a quarter between runs on the same host, with the
-    # machine's load and with how much JIT compiler work landed inside it.
-    session = [raw["cold_unit"]] + raw["units"]
+    # The session (cold pass plus WARM_PASSES warm passes) is the unit: a
+    # 3-4 s warm pass alone swung by a quarter between runs on the same host,
+    # with the machine's load and with how much JIT compiler work landed
+    # inside it.
+    session = [raw["cold_unit"]] + raw["units"][:WARM_PASSES]
     m.update(wall_s=sum(u["wall_s"] for u in session),
              cold_s=raw["cold_unit"]["wall_s"],
              cpu_s=sum(u["cpu_s"] for u in session))
@@ -412,7 +417,8 @@ def main():
     try:
         args = ["--workload", a.workload, "--data", data, "--seconds", a.seconds,
                 "--seed", a.seed, "--trace", a.trace, "--cpus", cpus,
-                "--mix", ",".join(MIX), "--topics", TOPICS]
+                "--mix", ",".join(MIX), "--topics", TOPICS,
+                "--warm-passes", WARM_PASSES]
         budget = RUN_LIMIT_S - (time.monotonic() - t_ready) - 20
         raw = jvm(cp, work, args, budget)
 

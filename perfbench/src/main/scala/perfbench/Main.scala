@@ -9,9 +9,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 import graft.{Artifacts, Caching, SparkEntry}
-import graft.operators.TopicModelOps
-import graft.pipeline.{AnalysisMain, AnalysisRunner, ChartSink, FullAnalysisMain,
-  PreprocessPipeline, ReportSink}
+import graft.pipeline.FullAnalysisMain
 
 /** The benchmark's JVM side. One process runs one workload and writes its
   * raw observations to `<work>/raw.json`; `perfbench/run.py` checks the
@@ -19,6 +17,7 @@ import graft.pipeline.{AnalysisMain, AnalysisRunner, ChartSink, FullAnalysisMain
   *
   *   perfbench.Main --workload W --data DIR --work DIR --seconds S
   *                  --seed N --trace 0|1 --cpus N --mix f1,f2,... --topics K
+  *                  --warm-passes P
   *
   * Workloads: `topic_report` (one EP2 report) and `face_mix` (a cold pass
   * over a list of faces, then warm passes).
@@ -95,7 +94,8 @@ object Main {
         case "topic_report" =>
           out ++= topicReport(spark, data, work, o("topics").toInt, tracer)
         case "face_mix" =>
-          out ++= faceMix(spark, data, work, seconds, seed, faces, tracer)
+          out ++= faceMix(spark, data, work, seconds, o("warm-passes").toInt, seed,
+            faces, tracer)
         case other => throw new IllegalArgumentException(s"unknown workload $other")
       }
       out("registries") = registries(Caching.registryStatsSnapshot())
@@ -125,18 +125,25 @@ object Main {
   }
 
   /** One `FullAnalysisMain.run` in this fresh process. A traced run makes
-    * the same public calls one by one inside spans instead, then one more
-    * untraced and one more traced report to price the tracing itself.
+    * the same call under the stack sampler, which splits its time into the
+    * report's parts, then one more untraced and one more traced report to
+    * price the tracing itself.
     */
   private def topicReport(spark: SparkSession, data: String, work: String,
                           topics: Int, tracer: Option[Tracer]): Map[String, Any] = {
+    val splits = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Double]]
     def report(i: Int, label: Option[String]): Map[String, Any] = {
       val dir = s"$work/report/$i"
+      def job() = FullAnalysisMain.run(spark, data, "text", dir, topics)
       var halves = (false, false)
       val u = unit(Map("traced" -> label.isDefined)) {
         halves = (tracer, label) match {
-          case (Some(t), Some(l)) => t.traced(l)(tracedReport(spark, data, dir, topics, t))
-          case _ => FullAnalysisMain.run(spark, data, "text", dir, topics)
+          case (Some(t), Some(l)) => t.traced(l)(t.span("report") {
+            val (r, split) = new Sampler(Sampler.report).run(job())
+            splits(l) = split
+            r
+          })
+          case _ => job()
         }
       }
       u ++ Map("halves_ok" -> Seq(halves._1, halves._2),
@@ -145,55 +152,11 @@ object Main {
     }
     val first = report(0, tracer.map(_ => "cold"))
     val measured = Map("units" -> Seq(first), "retained_heap_mb" -> retainedHeapMb)
-    tracer.fold(measured) { t =>
-      val pipeline = Seq("cluster_half", "lda_report", "grid_search", "charts")
-        .map(s => s -> t.spanSeconds(s)).toMap
-      measured ++ Map("pipeline" -> pipeline,
-        "overhead_units" -> Seq(report(1, None), report(2, Some("warm"))))
+    tracer.fold(measured) { _ =>
+      val overhead = Seq(report(1, None), report(2, Some("warm")))
+      measured ++ Map("pipeline" -> splits("cold"), "pipeline_by_phase" -> splits.toMap,
+        "overhead_units" -> overhead)
     }
-  }
-
-  /** The calls `FullAnalysisMain.run` makes with its defaults (20 LDA
-    * iterations, parquet sheets), each inside a span.
-    */
-  private def tracedReport(spark: SparkSession, data: String, out: String,
-                           k: Int, t: Tracer): (Boolean, Boolean) = {
-    def attempt(body: => Unit): Boolean =
-      try { body; true } catch { case NonFatal(e) =>
-        System.err.println(s"[perfbench] report half failed: $e"); false }
-    val clusterOk = attempt(t.span("cluster_half")(Caching.scoped {
-      val docs = AnalysisMain.loadDocs(spark, data)
-      PreprocessPipeline.requireColumns(docs, Seq("doc_id", "text"))
-      AnalysisRunner.runClusterAnalysis(spark, docs,
-        spark.read.parquet(s"$data/embeddings.parquet"), "doc_id", "text",
-        s"$out/bertopic", k, "parquet")
-      ChartSink.writeSimilarityHeatmap(
-        ReportSink.readSheet(spark, s"$out/bertopic", "similarity"),
-        s"$out/bertopic/topic_similarity.svg")
-      ChartSink.writeHtmlReport(s"$out/bertopic", s"Cluster (BERTopic-analog) analysis — $k topics")
-    }))
-    val lda = s"$out/lda"
-    val ldaOk = attempt(Caching.scoped {
-      val docs = AnalysisMain.loadDocs(spark, data)
-      t.span("lda_report") {
-        AnalysisRunner.runLdaAnalysis(spark, docs, "text", lda, k, 20, format = "parquet")
-      }
-      t.span("grid_search")(Caching.scoped {
-        ChartSink.writeCoherenceCurve(
-          TopicModelOps.gridSearchOver(spark, docs, "text").select("k", "umass"),
-          s"$lda/lda_coherence_curve.svg")
-      })
-      t.span("charts") {
-        ChartSink.writeWordFrequencyChart(
-          graft.operators.WordFreqOps.topWords(docs, "text", 30), s"$lda/word_frequency.svg")
-        ChartSink.writeSimilarityHeatmap(ReportSink.readSheet(spark, lda, "overlap"),
-          s"$lda/topic_overlap.svg", title = "Topic keyword overlap")
-        ChartSink.writeHistogramChart(ReportSink.readSheet(spark, lda, "dominant"),
-          s"$lda/dominant_topics.svg", title = "Dominant topic distribution")
-        ChartSink.writeHtmlReport(lda, s"LDA analysis — $k topics")
-      }
-    })
-    (clusterOk, ldaOk)
   }
 
   /** Every sheet and file of a report under `dir`, with the row count of
@@ -218,13 +181,14 @@ object Main {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
     else f.length()
 
-  /** One fresh process: a cold pass over the mix, then warm passes in a
-    * seeded-shuffle order until `seconds` have passed (a traced run
-    * alternates untraced and traced warm passes). Each face's output is then
-    * written once, outside the clocks, for the oracle compare.
+  /** One fresh process: a cold pass over the mix, then `warmPasses` warm
+    * passes in a seeded-shuffle order, and more until `seconds` have passed
+    * since the cold pass began (a traced run alternates untraced and traced
+    * warm passes). Each face's output is then written once, outside the
+    * clocks, for the oracle compare.
     */
   private def faceMix(spark: SparkSession, data: String, work: String,
-                      seconds: Double, seed: Long, faces: Seq[String],
+                      seconds: Double, warmPasses: Int, seed: Long, faces: Seq[String],
                       tracer: Option[Tracer]): Map[String, Any] = {
     val queries = SparkEntry.queries
     val unknown = faces.filterNot(queries.contains)
@@ -247,6 +211,7 @@ object Main {
       (u, os)
     }
 
+    val deadline = System.nanoTime() + (seconds * 1e9).toLong
     val (coldUnit, cold) = pass(0, faces, tracer.map(_ => "cold"))
     val afterCold = Caching.registryStatsSnapshot()
     val cachedMb = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / 1e6
@@ -254,10 +219,9 @@ object Main {
     // record per query run, so the heap would grow with the pass count
     val retained = retainedHeapMb
     val warm = scala.collection.mutable.ArrayBuffer.empty[(Map[String, Any], Seq[Outcome])]
-    val deadline = System.nanoTime() + (seconds * 1e9).toLong
-    // at least four passes: the first ones still run beside the JIT, and a
-    // traced run needs two untraced and two traced ones
-    while (warm.size < 4 || System.nanoTime() < deadline) {
+    // the unit of work is the cold pass plus the first `warmPasses` warm
+    // ones; a pass beyond them adds latency samples, never unit time
+    while (warm.size < warmPasses || System.nanoTime() < deadline) {
       val p = warm.size + 1
       // the previous pass's garbage is collected off the clock
       System.gc()

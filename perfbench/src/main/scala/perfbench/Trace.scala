@@ -142,10 +142,6 @@ final class Tracer(spark: SparkSession) {
     }
   }
 
-  /** Seconds spent in all spans called `name`. */
-  def spanSeconds(name: String): Double =
-    spans.filter(_.name == name).map(_.seconds).sum
-
   /** Spark counters, wall and planning seconds of one phase. */
   def phaseReport(label: String): Map[String, Double] =
     Option(byPhase.get(label)).fold(new SparkCounters().toMap)(_.toMap) ++ Map(

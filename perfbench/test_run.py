@@ -20,7 +20,7 @@ class FailuresAreNotTimings(unittest.TestCase):
         warm += [outcome("boom", p, None, "injected") for p in (1, 2, 3)]
         return {"setup_s": 10.0, "retained_heap_mb": 100.0, "cold": cold,
                 "outcomes": warm, "cold_unit": {"wall_s": 9.0, "cpu_s": 9.0},
-                "units": [{"wall_s": 2.0, "cpu_s": 2.0, "traced": False}] * 3}
+                "units": [{"wall_s": 2.0, "cpu_s": 2.0, "traced": False}] * run.WARM_PASSES}
 
     def test_thrown_and_check_failed_faces_give_no_samples(self):
         raw = self.raw()
@@ -29,8 +29,19 @@ class FailuresAreNotTimings(unittest.TestCase):
         self.assertEqual(extra["warm_samples"], 3)
         self.assertAlmostEqual(extra["warm_p50_s"], 1.2)
         self.assertAlmostEqual(extra["warm_face_geomean_s"], 1.2)
-        self.assertAlmostEqual(m["wall_s"], 15.0)
+        self.assertAlmostEqual(m["wall_s"], 9.0 + 2.0 * run.WARM_PASSES)
         self.assertEqual(run.face_latencies(raw["cold"], {"boom", "bad"}), [5.0])
+
+    def test_extra_warm_passes_stay_out_of_the_unit(self):
+        raw = self.raw()
+        m, _ = run.end_to_end("face_mix", raw, failed_faces=set())
+        # passes run after the fixed ones, because --seconds had not yet
+        # passed, add neither their wall nor their CPU time
+        for extra in (1, 5):
+            more = dict(raw, units=raw["units"] + [
+                {"wall_s": 1.5, "cpu_s": 1.5, "traced": False}] * extra)
+            m2, _ = run.end_to_end("face_mix", more, failed_faces=set())
+            self.assertEqual((m2["wall_s"], m2["cpu_s"]), (m["wall_s"], m["cpu_s"]))
 
     def test_tail_has_ten_samples_beyond_it(self):
         value, pct, n = run.tail(list(range(1, 101)))
